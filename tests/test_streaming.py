@@ -72,23 +72,23 @@ def test_stream_stream_join_respects_interval_bounds(spark, tmp_path):
     from threat_detection_nosql_spark.streaming.stream_queries import (
         purchase_error_pairs)
 
-    def ns(hhmm):
+    def us(hhmm):
         h, m = hhmm.split(":")
         base = 1704096000  # 2024-01-01 08:00:00 UTC
-        return (base + int(h) * 3600 + int(m) * 60) * 1_000_000_000
+        return (base + int(h) * 3600 + int(m) * 60) * 1_000_000
 
-    rows = [  # (event_id, ts_ns, user_id, event_type)
-        (100, ns("2:00"), 1, "purchase"),
-        (200, ns("2:10"), 1, "error"),     # in window -> pair
-        (201, ns("3:00"), 1, "error"),     # > 30 min -> no pair
-        (202, ns("2:05"), 2, "error"),     # other user -> no pair
-        (101, ns("2:50"), 2, "purchase"),
-        (203, ns("2:55"), 2, "error"),     # in window -> pair
+    rows = [  # (event_id, ts_us, user_id, event_type)
+        (100, us("2:00"), 1, "purchase"),
+        (200, us("2:10"), 1, "error"),     # in window -> pair
+        (201, us("3:00"), 1, "error"),     # > 30 min -> no pair
+        (202, us("2:05"), 2, "error"),     # other user -> no pair
+        (101, us("2:50"), 2, "purchase"),
+        (203, us("2:55"), 2, "error"),     # in window -> pair
     ]
     table = pa.table({
         "event_id": pa.array([r[0] for r in rows], pa.int64()),
         "ts": pa.array([r[1] for r in rows],
-                       pa.timestamp("ns")),
+                       pa.timestamp("us")),
         "user_id": pa.array([r[2] for r in rows], pa.int64()),
         "event_type": pa.array([r[3] for r in rows], pa.string()),
         "value": pa.array([0.0] * len(rows), pa.float64()),

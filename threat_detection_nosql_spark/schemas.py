@@ -1,8 +1,13 @@
 """Explicit StructTypes for every table the engine reads.
 
 The reference relies on pandas dtype inference (`data_preprocessing.py:12`);
-we declare schemas once so scans never pay inference and Catalyst can prune
-columns against a known ReadSchema (SURVEY.md §1.5).
+here each schema is declared once. ``TABLES`` is the source catalog:
+``sources.readers.load_table`` and the stream sources hand it to the
+parquet reader, so building a DataFrame reads no footer and launches no
+Spark job, and Catalyst prunes columns against a known ReadSchema
+(SURVEY.md §1.5). ``tests/test_source_catalog.py`` asserts every footer
+equals its declaration at each scale factor, so drift fails loudly
+instead of being coerced.
 """
 
 from __future__ import annotations
@@ -10,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---- driver testdata tables (FIXTURES.md §1) --------------------------------
+# The datetime columns (o_orderdate, l_shipdate, events.ts) are stored as
+# TIMESTAMP(MICROS) without UTC adjustment, which Spark types as
+# TIMESTAMP_NTZ; load_table casts ``events.ts`` to a session-zoned timestamp.
 
 REGION = T.StructType([
     T.StructField("r_regionkey", T.IntegerType()),
@@ -51,7 +59,7 @@ ORDERS = T.StructType([
     T.StructField("o_custkey", T.LongType()),
     T.StructField("o_orderstatus", T.StringType()),
     T.StructField("o_totalprice", T.DoubleType()),
-    T.StructField("o_orderdate", T.TimestampType()),
+    T.StructField("o_orderdate", T.TimestampNTZType()),
     T.StructField("o_orderpriority", T.StringType()),
 ])
 
@@ -66,12 +74,12 @@ LINEITEM = T.StructType([
     T.StructField("l_tax", T.DoubleType()),
     T.StructField("l_returnflag", T.StringType()),
     T.StructField("l_linestatus", T.StringType()),
-    T.StructField("l_shipdate", T.TimestampType()),
+    T.StructField("l_shipdate", T.TimestampNTZType()),
 ])
 
 EVENTS = T.StructType([
     T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
+    T.StructField("ts", T.TimestampNTZType()),
     T.StructField("user_id", T.LongType()),
     T.StructField("event_type", T.StringType()),
     T.StructField("value", T.DoubleType()),

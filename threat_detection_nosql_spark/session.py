@@ -37,9 +37,6 @@ def get_spark(app_name: str = "threat_detection_nosql_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # driver testdata stores events.ts as TIMESTAMP(NANOS); Spark has
-        # no nanos type — read as long, converted in sources.readers.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):

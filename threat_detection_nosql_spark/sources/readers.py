@@ -1,9 +1,10 @@
 """Sources (SURVEY.md §2.1 S1–S3).
 
 The reference eagerly materializes a CSV into driver RAM
-(`data_preprocessing.py:12`); here every source is a lazy DataFrame scan
-with an explicit schema so filter pushdown / column pruning reach the
-file format.
+(`data_preprocessing.py:12`); here every source is a lazy DataFrame scan.
+Parquet scans take their schema from the ``schemas.TABLES`` catalog
+instead of the file footer, so building a DataFrame launches no Spark
+job; CSV scans use an explicit schema instead of inference.
 """
 
 from __future__ import annotations
@@ -12,45 +13,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from threat_detection_nosql_spark import schemas
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan of one driver-testdata table (S1 analog).
+def _session_typed(spark: SparkSession, name: str, df: DataFrame) -> DataFrame:
+    """`events.ts` is stored as TIMESTAMP(MICROS) without UTC
+    adjustment, which Spark reads as TIMESTAMP_NTZ. Cast it to the
+    session-zoned type every downstream temporal function (unix_micros,
+    window, watermark) expects; the cast interprets the NTZ wall-clock
+    in the session timezone and DuckDB's read is zoneless, so parity
+    needs UTC. ``session.timeZone`` is runtime-settable, so it is pinned
+    here rather than trusting the host JVM default."""
+    if name != "events":
+        return df
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
-    Parquet is already typed; the vectorized reader keeps the footer
-    schema. One normalization: `events.ts` is TIMESTAMP(NANOS) in the
-    files — Spark reads it as nanosecond longs
-    (`spark.sql.legacy.parquet.nanosAsLong`), converted here to a
-    microsecond timestamp with the same truncation DuckDB applies.
-    """
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan of one testdata table (S1 analog) with its
+    declared ``schemas.TABLES`` schema."""
     from threat_detection_nosql_spark.deploy import ensure_package_on_workers
     ensure_package_on_workers(spark)
-    if name == "events":
-        # effective only if no parquet read happened yet on this session;
-        # harmless otherwise (the NTZ branch below covers that path)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        dt = df.schema["ts"].dataType
-        if isinstance(dt, T.LongType):
-            # session built with nanosAsLong=true (session.get_spark)
-            df = df.withColumn("ts",
-                               F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(dt, T.TimestampNTZType):
-            # vanilla session (driver contract): Spark 4.1 reads
-            # TIMESTAMP(NANOS) as micro-truncated TIMESTAMP_NTZ; cast to
-            # the session-zoned type every downstream temporal function
-            # (unix_micros, window, watermark) expects — the cast
-            # interprets NTZ wall-clock in the session timezone. DuckDB's
-            # read is zoneless, so parity requires UTC; session.timeZone
-            # is runtime-settable (unlike nanosAsLong), so pin it here
-            # rather than trusting the host JVM default.
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    df = (spark.read.schema(schemas.TABLES[name])
+          .parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    return _session_typed(spark, name, df)
+
+
+def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-stream twin of load_table: the same declared schema and
+    ``events.ts`` conversion, one file of ``sf_dir`` as the source."""
+    df = (spark.readStream.schema(schemas.TABLES[name])
+          .option("pathGlobFilter", f"{name}.parquet")
+          .parquet(sf_dir))
+    return _session_typed(spark, name, df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str,
