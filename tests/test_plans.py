@@ -86,11 +86,15 @@ def test_two_hop_preaggregates_before_join(spark):
     assert plan.count("HashAggregate") >= 4
 
 
-def test_entropy_joins_broadcast_user_features(spark):
-    """J6: the per-user entropy sides are |users| rows — AQE must pick
-    broadcast joins for them, never a shuffle of the base agg."""
-    plan = final_adaptive_plan(user_features(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
+def test_user_features_entropies_need_no_join(spark):
+    """J6: the entropies never cost a shuffle of the base agg. Counts,
+    distinct counts and entropies come from one events scan through one
+    linear chain of three hash exchanges, with no join at all."""
+    plan = final_adaptive_plan(user_features(spark, SF_DIR)) \
+        .split("Initial Plan")[0]
+    assert "Join" not in plan
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("Exchange hashpartitioning") == 3
 
 
 def test_ann_baseline_broadcasts_queries(spark):
@@ -127,11 +131,18 @@ def test_minhash_signatures_single_exchange(spark):
 
 
 def test_approx_user_features_avoids_expand(spark):
-    """A6 scale mode: exact multi-countDistinct needs an Expand (3×
-    shuffle volume); the HLL path must not."""
+    """A6 scale mode: the exact distinct counts explode every event into
+    (user, pc) and (user, resource) groups as well; the HLL path must
+    explode only the entropy keys and expand nothing."""
+    def exploded(plan):
+        return next(ln for ln in plan.splitlines() if "inline(" in ln)
+
     exact = formatted_plan(user_features(spark, SF_DIR))
     approx = formatted_plan(user_features(spark, SF_DIR, approx=True))
-    assert "Expand" in exact
+    assert "pc#" in exploded(exact) and "resource#" in exploded(exact)
+    assert "pc#" not in exploded(approx)
+    assert "resource#" not in exploded(approx)
+    assert "approx_count_distinct" in approx
     assert "Expand" not in approx
 
 

@@ -21,7 +21,11 @@ from pyspark.sql import functions as F
 from bench import HEADLINE_COLLECT, HEADLINE_COUNT
 from tests.conftest import SF_DIR
 from threat_detection_nosql_spark import schemas
-from threat_detection_nosql_spark.operators.etl import derive_temporal_features
+from threat_detection_nosql_spark.operators.etl import (
+    ACTIVITY_LOG_ORACLE_SQL,
+    activity_log,
+    derive_temporal_features,
+)
 from threat_detection_nosql_spark.queries import all_queries
 from threat_detection_nosql_spark.sources.readers import load_table
 
@@ -82,6 +86,23 @@ def test_events_ts_edges_match_duckdb(spark, tmp_path, session_tz):
     got = [tuple(r) for r in derive_temporal_features(ev).select(
         "event_id", F.unix_micros("ts"), "hour_of_day", "day_of_week")
         .orderBy("event_id").collect()]
+    assert got == want
+
+
+def test_activity_log_null_ts_matches_oracle(spark, tmp_path):
+    # a null timestamp has null hour/day, and neither temporal flag set
+    con = duckdb.connect()
+    path = tmp_path / "events.parquet"
+    con.execute(f"COPY ({_EDGE_EVENTS} WHERE ts IS NULL) TO '{path}' "
+                "(FORMAT parquet)")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    cols = ["event_id", "user", "pc", "activity", "resource", "value",
+            "hour_of_day", "day_of_week", "is_weekend", "is_after_hours"]
+    want = con.sql(f"SELECT {', '.join(cols)} "
+                   f"FROM ({ACTIVITY_LOG_ORACLE_SQL})").fetchall()
+    got = [tuple(r) for r in
+           activity_log(spark, str(tmp_path)).select(*cols).collect()]
+    assert want == [(4, 7, 4, "login", 1, 1.5, None, None, 0, 0)]
     assert got == want
 
 

@@ -469,19 +469,6 @@ def _avg_path_len(n: float) -> float:
     return 2.0 * h - 2.0 * (n - 1) / n
 
 
-def _iforest_path(xrow: np.ndarray, nodes) -> float:
-    node = nodes[0]
-    depth = 0
-    i = 0
-    while node[0] >= 0:
-        f, s, li, ri = node
-        i = li if xrow[int(f)] < s else ri
-        node = nodes[i]
-        depth += 1
-    leaf_n = node[1]
-    return depth + _avg_path_len(leaf_n)
-
-
 def _tree_arrays(nodes) -> tuple[np.ndarray, ...]:
     """Flatten one tree to parallel arrays for vectorized traversal."""
     a = np.array(nodes, dtype=float)  # columns: f, s, li, ri

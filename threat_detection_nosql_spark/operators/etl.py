@@ -18,11 +18,13 @@ def _temporal_features(ts_col: str) -> dict[str, Column]:
     ts = F.col(ts_col)
     hour = F.hour(ts)
     dow_mon0 = (F.dayofweek(ts) + F.lit(5)) % 7
+    # a null timestamp has null hour/day but is neither weekend nor
+    # after hours (the reference's `1 if x >= 5 else 0` on NaT gives 0)
     return {
         "hour_of_day": hour,
         "day_of_week": dow_mon0,
-        "is_weekend": (dow_mon0 >= 5).cast("int"),
-        "is_after_hours": ((hour < 8) | (hour > 18)).cast("int"),
+        "is_weekend": F.when(dow_mon0 >= 5, 1).otherwise(0),
+        "is_after_hours": F.when((hour < 8) | (hour > 18), 1).otherwise(0),
     }
 
 
@@ -34,6 +36,8 @@ def derive_temporal_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
       ``dayofweek`` is Sunday=1, hence the +5 mod 7 shift (F3)
     - ``is_weekend``: dow >= 5 (F4)
     - ``is_after_hours``: hour < 8 or hour > 18 (F5)
+
+    Both flags are 0, not null, when the timestamp is null.
     """
     return df.withColumns(_temporal_features(ts_col))
 

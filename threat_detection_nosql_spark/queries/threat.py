@@ -239,78 +239,86 @@ def user_features(spark: SparkSession, sf_dir: str,
                   approx: bool = False) -> DataFrame:
     """The reference issues 6 correlated CALL{} subqueries per user plus
     two client-side entropy loops (`neo4j_analysis.py:134-175,203-243`).
-    Decorrelated here into ONE multi-aggregate pass (A10) — six features
-    in a single shuffle — plus two entropy aggs joined on user (J6);
-    the entropy outputs are tiny (|users| rows) so they broadcast.
+    Decorrelated here into ONE aggregation chain over one events scan
+    (A10 + J5/J6): each event is exploded into one tagged row per
+    dimension (activity, hour, pc, resource), so
 
-    ``approx=True`` is the 100 TB mode: the three exact countDistincts
-    force an Expand (3× shuffle rows); approx_count_distinct (HLL,
-    rsd 1%) keeps the aggregation single-pass with fixed-size state.
+    1. ``(user, dim, key)`` groups give every frequency table;
+    2. ``(user, dim)`` groups give the totals and flag counts, each
+       distinct count (the number of non-null keys) and each entropy
+       (the exact entropy_from_freq algebra, round(log2(T) − Σf·log2 f
+       / T, 6));
+    3. ``user`` groups pivot the dimensions into columns.
+
+    The chain is linear (three exchanges, no join), so AQE plans the
+    same stages in the same order on every run and the generated code
+    is reused from the codegen cache. Spark's own exact multi-distinct
+    rewrite (RewriteDistinctAggregates) orders its Expand from a hash map
+    keyed on expression IDs, and a separate entropy branch joined back
+    on user lets two sibling stages race for codegen stage IDs; both
+    made every build compile new classes.
+
+    ``approx=True`` is the 100 TB mode: the (user, pc) and
+    (user, resource) groups are the large state, so the chain keeps
+    only activity and hour and the three distinct counts come from one
+    approx_count_distinct pass (HLL, rsd 1%) joined on user.
     """
     log = activity_log(spark, sf_dir)
+    no_long, no_str = F.lit(None).cast("long"), F.lit(None).cast("string")
+    # dim -> (long key, string key); the other one stays null
+    keys = {"a": (no_long, F.col("activity")),
+            "h": (F.col("hour_of_day").cast("long"), no_str)}
+    if not approx:
+        keys |= {"p": (F.col("pc"), no_str),
+                 "r": (F.col("resource"), no_str)}
+    tagged = log.select(
+        "user", F.col("is_after_hours").alias("ah"),
+        F.col("is_weekend").alias("we"),
+        F.inline(F.array(*(
+            F.struct(F.lit(d).alias("dim"), kl.alias("kl"), ks.alias("ks"))
+            for d, (kl, ks) in keys.items()))))
+    per_dim = (tagged.groupBy("user", "dim", "kl", "ks")
+               .agg(F.count("*").alias("freq"),
+                    F.sum("ah").alias("ah"), F.sum("we").alias("we"))
+               .groupBy("user", "dim")
+               .agg(F.sum("freq").alias("total"),
+                    F.sum("ah").alias("ah"), F.sum("we").alias("we"),
+                    (F.count("kl") + F.count("ks")).alias("distinct"),
+                    F.round(F.log2(F.sum("freq"))
+                            - F.sum(F.col("freq") * F.log2("freq"))
+                            / F.sum("freq"), 6).alias("e")))
+
+    def pick(dim: str, col: str):
+        return F.max(F.when(F.col("dim") == dim, F.col(col)))
+
+    distinct_cols = ["unique_systems", "unique_resources", "activity_types"]
+    feats = per_dim.groupBy("user").agg(
+        pick("a", "total").alias("total_activities"),
+        pick("a", "ah").alias("after_hours_activities"),
+        pick("a", "we").alias("weekend_activities"),
+        *([] if approx else [
+            pick(d, "distinct").alias(c)
+            for d, c in zip(("p", "r", "a"), distinct_cols)]),
+        # a null user matches nothing in the oracle's entropy join
+        *(F.when(F.col("user").isNotNull(), pick(d, "e")).alias(c)
+          for d, c in (("a", "activity_entropy"),
+                       ("h", "temporal_entropy"))))
     if approx:
-        distinct_aggs = [
-            F.approx_count_distinct("pc", 0.01).alias("unique_systems"),
-            F.approx_count_distinct("resource", 0.01)
-             .alias("unique_resources"),
-            F.approx_count_distinct("activity", 0.01)
-             .alias("activity_types"),
-        ]
-    else:
-        distinct_aggs = [
-            F.countDistinct("pc").alias("unique_systems"),
-            F.countDistinct("resource").alias("unique_resources"),
-            F.countDistinct("activity").alias("activity_types"),
-        ]
-    base = (log.groupBy("user").agg(
-        F.count("*").alias("total_activities"),
-        F.sum(F.when(F.col("is_after_hours") == 1, 1).otherwise(0))
-         .alias("after_hours_activities"),
-        F.sum(F.when(F.col("is_weekend") == 1, 1).otherwise(0))
-         .alias("weekend_activities"),
-        *distinct_aggs))
+        feats = feats.join(log.groupBy("user").agg(*(
+            F.approx_count_distinct(k, 0.01).alias(c)
+            for k, c in zip(("pc", "resource", "activity"), distinct_cols))),
+            "user")
     # safe-divide ratio guard (F9, `neo4j_analysis.py:184-185`)
     divisor = F.when(F.col("total_activities") > 0,
                      F.col("total_activities")).otherwise(F.lit(1))
-    base = (base
-            .withColumn("after_hours_ratio",
-                        F.round(F.col("after_hours_activities") / divisor, 6))
-            .withColumn("weekend_ratio",
-                        F.round(F.col("weekend_activities") / divisor, 6)))
-    # fused entropy path, round 12: BOTH entropies from ONE chain. The
-    # r11 form re-aggregated the (user, activity, hour) pre-agg twice
-    # and relied on ReuseExchange to dedupe the shared exchange — the
-    # physical plan shows it did NOT fire (three full scan→agg chains,
-    # plans/r12/user_features_before.txt). An Expand tags each pre-agg
-    # row once per dimension, so one aggregation chain computes both
-    # frequency tables, both entropies (the exact entropy_from_freq
-    # algebra: round(log2(T) − Σf·log2 f / T, 6) over identical
-    # frequencies), and a 2-column pivot — one events scan instead of
-    # two, one join instead of two (guide §2.3/§2.4; measured
-    # 1.03 → 0.84 s at sf0.1).
-    g = (log.groupBy("user", "activity", "hour_of_day")
-         .agg(F.count("*").alias("c")))
-    dims = (g.select(
-        "user", "c",
-        F.explode(F.array(
-            F.struct(F.lit("a").alias("dim"),
-                     F.col("activity").cast("string").alias("key")),
-            F.struct(F.lit("h").alias("dim"),
-                     F.col("hour_of_day").cast("string").alias("key"))))
-        .alias("dk"))
-        .select("user", "c", F.col("dk.dim").alias("dim"),
-                F.col("dk.key").alias("key")))
-    fr = dims.groupBy("user", "dim", "key").agg(F.sum("c").alias("freq"))
-    ent = (fr.groupBy("user", "dim")
-           .agg(F.round(F.log2(F.sum("freq"))
-                        - F.sum(F.col("freq") * F.log2("freq"))
-                        / F.sum("freq"), 6).alias("e")))
-    piv = ent.groupBy("user").agg(
-        F.max(F.when(F.col("dim") == "a", F.col("e")))
-        .alias("activity_entropy"),
-        F.max(F.when(F.col("dim") == "h", F.col("e")))
-        .alias("temporal_entropy"))
-    return base.join(piv, "user", "left")
+    return feats.select(
+        "user", "total_activities", "after_hours_activities",
+        "weekend_activities", *distinct_cols,
+        F.round(F.col("after_hours_activities") / divisor, 6)
+         .alias("after_hours_ratio"),
+        F.round(F.col("weekend_activities") / divisor, 6)
+         .alias("weekend_ratio"),
+        "activity_entropy", "temporal_entropy")
 
 
 _USER_FEATURES_SQL = f"""

@@ -4,6 +4,21 @@ The reference pipeline is single-process pandas + a Neo4j server
 (SURVEY.md §3); here the execution engine is Spark itself, so the only
 "setup" is a session with AQE + Arrow enabled and shuffle partitions
 sized to the environment.
+
+Generated-code cache: Spark keeps compiled codegen classes in one
+JVM-global cache whose size (``spark.sql.codegen.cache.maxEntries``,
+default 100) is read once, when the first session in the JVM first
+compiles. One pass of the 12 headline queries compiles about 150
+classes, so at the default every repeated pass evicts and recompiles
+all of them (~1.5 s of Janino time per warm pass at sf0.1).
+``CODEGEN_CACHE_ENTRIES`` is sized from the measured working set: a
+sweep of every non-``formats`` registry query at sf0.01 compiles about
+3,700 classes cold (4-core host, ``local[4]``), which 8192 holds with
+room to spare. It is a static conf, so it is set on the builder; a
+session created after another one in the same JVM cannot change it.
+Vanilla driver-style sessions
+(``scripts/check_all.py``, ``scripts/time_queries.py``) do not call
+``get_spark`` and keep the default of 100.
 """
 
 from __future__ import annotations
@@ -13,6 +28,9 @@ import os
 from pyspark.sql import SparkSession
 
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# generated classes kept by the JVM-global codegen cache (module docstring)
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def get_spark(app_name: str = "threat_detection_nosql_spark",
@@ -38,6 +56,8 @@ def get_spark(app_name: str = "threat_detection_nosql_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = (builder
